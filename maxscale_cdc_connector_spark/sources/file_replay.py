@@ -3,9 +3,10 @@
 The reference's wire format is newline-delimited JSON records
 (cdc_connector.cpp:459-474); a captured session is therefore a plain
 text file of event lines. Replaying it is the engine's offline test
-path (SURVEY.md §2B `cdc_file_replay`) and the standard way to backfill:
-the same decode (`from_json` + typemap schema) serves the live socket
-source and the file replay, so query logic is identical against either.
+path (SURVEY.md §2B `cdc_file_replay`) and the standard way to backfill.
+Replay decodes with Spark's `from_json` over the same typemap schema the
+live socket sources use (they decode through sources/decode.py), so the
+columns and types match and query logic runs unchanged against either.
 
 Scan behavior at scale: `spark.read.text` / `readStream.format("text")`
 split large logs by `spark.sql.files.maxPartitionBytes` and parallelize

