@@ -245,15 +245,15 @@ class WireDecoder:
     ) -> None:
         if pa.cpu_count() < ARROW_CPUS:
             pa.set_cpu_count(ARROW_CPUS)
-        self.fields = [
+        self._fields = [
             f
             for f in schema.fields
             if not (source_id is not None and f.name == SOURCE_ID_COL)
         ]
         self._null_missing = null_missing
-        self._names = [f.name for f in self.fields]
-        self._types = [_arrow_type(f.dataType) for f in self.fields]
-        self._convs = [_converter(f.dataType) for f in self.fields]
+        self._names = [f.name for f in self._fields]
+        self._types = [_arrow_type(f.dataType) for f in self._fields]
+        self._convs = [_converter(f.dataType) for f in self._fields]
         out = [pa.field(n, t) for n, t in zip(self._names, self._types)]
         self._source_id = None
         if source_id is not None:
@@ -263,7 +263,7 @@ class WireDecoder:
         # Envelope fields the query omits still parse (as int64): the
         # cursor window always runs off the wire.
         wire = {name: pa.int64() for name in ENVELOPE}
-        for f, typ in zip(self.fields, self._types):
+        for f, typ in zip(self._fields, self._types):
             wire[f.name] = pa.string() if isinstance(f.dataType, _STRING_CARRIED) else typ
         self._parse = pj.ParseOptions(
             explicit_schema=pa.schema(list(wire.items())),
@@ -278,7 +278,7 @@ class WireDecoder:
         between two of its connections, is seen."""
         live = schema_record_to_struct(schema_record).fields
         if [(f.name, f.dataType) for f in live] != [
-            (f.name, f.dataType) for f in self.fields
+            (f.name, f.dataType) for f in self._fields
         ]:
             raise SchemaChangedError(schema_record)
 
@@ -344,7 +344,7 @@ class WireDecoder:
             tbl = tbl.slice(0, limit)
         cols = [
             _finalize(tbl.column(f.name), f.dataType, typ, conv)
-            for f, typ, conv in zip(self.fields, self._types, self._convs)
+            for f, typ, conv in zip(self._fields, self._types, self._convs)
         ]
         return self._emit(cols, [tbl.column(name) for name in ENVELOPE])
 
