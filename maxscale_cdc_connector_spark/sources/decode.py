@@ -165,18 +165,30 @@ def _parse_line(line: bytes) -> dict[str, Any]:
     return record
 
 
-def _raise_on_schema_record(block: bytes) -> None:
-    """:class:`SchemaChangedError` if the block carries a mid-stream
-    schema record (ALTER TABLE). One memchr-speed substring scan over
+def _find_schema_record(block: bytes) -> tuple[int, dict[str, Any]] | None:
+    """The block's first mid-stream schema record (ALTER TABLE) and the
+    byte offset its line starts at. One memchr-speed substring scan over
     the whole block; only a block containing the marker pays the line
     split, and only candidate lines pay a parse."""
     if b'"fields"' not in block:
-        return
+        return None
+    pos = 0
     for line in block.split(b"\n"):
         if b'"fields"' in line:
             record = _parse_line(line)
             if is_schema_record(record):
-                raise SchemaChangedError(record)
+                return pos, record
+        pos += len(line) + 1
+    return None
+
+
+def _passes(line: bytes, through: tuple) -> bool:
+    """True when the event on ``line`` is past the ``through`` GTID."""
+    record = _parse_line(line)
+    try:
+        return tuple(int(record[name]) for name in ENVELOPE[:3]) > through
+    except (KeyError, TypeError, ValueError):
+        return False
 
 
 def _check_envelope(env: list) -> None:
@@ -299,14 +311,22 @@ class WireDecoder:
         of those. ``last`` is the kept rows' final ``(gtid,
         event_number)``, ``None`` when none are kept.
         """
-        _raise_on_schema_record(block)
+        found = _find_schema_record(block)
+        if found is not None:
+            pos, record = found
+            # A replay bounded by ``through`` stops at the first event
+            # past it, so a schema record after that event is never
+            # reached: decode the lines before it instead.
+            head = block[: max(pos - 1, 0)]
+            if through is None or not head or not _passes(
+                head[head.rfind(b"\n") + 1 :], through
+            ):
+                raise SchemaChangedError(record)
+            block, n_lines = head, head.count(b"\n") + 1
         try:
-            out = self.decode_arrow(block, n_lines, after, through, limit)
-        except pa.ArrowInvalid:  # e.g. an uncastable date string
-            out = None
-        if out is None:
-            out = self.decode_records(block, after, through, limit)
-        return out
+            return self.decode_arrow(block, n_lines, after, through, limit)
+        except pa.ArrowInvalid:  # pyarrow declined the block
+            return self.decode_records(block, after, through, limit)
 
     def decode_arrow(
         self,
@@ -315,15 +335,13 @@ class WireDecoder:
         after: tuple = NO_CURSOR,
         through: tuple | None = None,
         limit: int | None = None,
-    ) -> tuple[pa.RecordBatch, tuple[str, int] | None] | None:
-        """The columnar path; ``None`` when pyarrow cannot parse the
-        block one row per line."""
-        try:
-            tbl = pj.read_json(io.BytesIO(block), parse_options=self._parse)
-        except pa.ArrowInvalid:
-            return None
+    ) -> tuple[pa.RecordBatch, tuple[str, int] | None]:
+        """The columnar path. Raises ``pyarrow.ArrowInvalid`` to decline
+        a block it cannot decode exactly: one pyarrow cannot parse one
+        row per line, or a value a cast refuses."""
+        tbl = pj.read_json(io.BytesIO(block), parse_options=self._parse)
         if tbl.num_rows != n_lines:  # e.g. two objects on one line
-            return None
+            raise pa.ArrowInvalid(f"{tbl.num_rows} rows parsed from {n_lines} lines")
         _check_envelope([tbl.column(name) for name in ENVELOPE])
         if not self._null_missing:
             # pyarrow.json nulls both JSON nulls and MISSING keys; only

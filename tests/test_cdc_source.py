@@ -13,6 +13,7 @@ cdc_connector.cpp:106-107).
 from __future__ import annotations
 
 import decimal
+import threading
 import time
 
 import pytest
@@ -238,6 +239,68 @@ def test_reader_replay_between_offsets() -> None:
         reader = _reader(srv)
         replayed = _rows(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"}))
         assert [r[2] for r in replayed] == [2, 3, 4]
+        reader.stop()
+
+
+def _trickle(srv: FakeMaxScale, first_seq: int, stop: threading.Event) -> threading.Thread:
+    """Push one event every 50 ms — gaps well inside pollSeconds, so the
+    stream never goes idle — until ``stop`` is set (at most ~10 s)."""
+
+    def push() -> None:
+        seq = first_seq
+        while not stop.wait(0.05) and seq < first_seq + 200:
+            srv.push_event(make_event(seq))
+            seq += 1
+
+    thread = threading.Thread(target=push, daemon=True)
+    thread.start()
+    return thread
+
+
+def test_reader_replay_returns_promptly_on_a_live_trickle() -> None:
+    """A replay ends at the first event past ``end`` even when the
+    stream keeps flowing: it never waits for a quiet poll or a full
+    block of events beyond ``end``."""
+    events = [make_event(s) for s in (1, 2, 3, 4, 5)]
+    with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
+        stop = threading.Event()
+        thread = _trickle(srv, 6, stop)
+        try:
+            reader = _reader(srv)
+            t0 = time.monotonic()
+            replayed = _rows(
+                reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"})
+            )
+            elapsed = time.monotonic() - t0
+        finally:
+            stop.set()
+            thread.join()
+        assert [r[2] for r in replayed] == [2, 3, 4]
+        assert elapsed < 3.0, f"replay took {elapsed:.1f} s on a live stream"
+        reader.stop()
+
+
+def test_reader_replay_never_reaches_a_schema_change_past_end() -> None:
+    """An ALTER arriving after the replay's ``end`` belongs to a later
+    batch: the replay stops before it, as a per-event reader would."""
+    events = [make_event(s) for s in (1, 2, 3, 4, 5)]
+    with FakeMaxScale(TEST_SCHEMA_RECORD, events) as srv:
+        new_schema = dict(TEST_SCHEMA_RECORD)
+        new_schema["fields"] = TEST_SCHEMA_RECORD["fields"] + [
+            {"name": "extra", "type": "string", "real_type": "varchar", "length": 10}
+        ]
+        srv.push_schema_change(new_schema)
+        srv.push_event(make_event(6))
+        # Keep announcing the old schema on connect: this models an
+        # ALTER that lands after the replay's connection opened, so the
+        # new schema record reaches it mid-stream, right after event 5.
+        srv.schema_record = TEST_SCHEMA_RECORD
+        reader = _reader(srv)
+        replayed = _rows(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-4"}))
+        assert [r[2] for r in replayed] == [2, 3, 4]
+        # A replay whose end lies past the ALTER still fails on it.
+        with pytest.raises(SchemaChangedError):
+            _rows(reader.readBetweenOffsets({"gtid": "0-3000-2"}, {"gtid": "0-3000-6"}))
         reader.stop()
 
 

@@ -524,8 +524,6 @@ def _decode_outcome(fn):
         return ("error", str(exc))
     except pa.ArrowInvalid:
         return None  # declined: WireDecoder.decode falls back
-    if out is None:
-        return None
     batch, last = out
     return ("ok", batch.schema, batch.to_pydict(), last)
 

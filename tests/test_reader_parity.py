@@ -44,6 +44,7 @@ PARITY_SCHEMA_RECORD = {
         {"name": "day", "type": "string", "real_type": "date", "length": -1},
         {"name": "raw", "type": "string", "real_type": "binary", "length": 8},
         {"name": "amount", "type": "string", "real_type": "decimal(10,2)", "length": -1},
+        {"name": "whole", "type": "string", "real_type": "decimal(10,0)", "length": -1},
         {"name": "note", "type": "string", "real_type": "varchar", "length": 40},
     ],
 }
@@ -66,12 +67,13 @@ def _event(seq: int, **values) -> dict:
 CORPUS = [
     # Every value at its declared form; DECIMAL already at scale 2.
     _event(1, ts="2024-01-01 12:00:00", day="2024-01-01", raw="abc",
-           amount="1.50", note="first"),
-    # Fractional seconds, a leap day, non-ASCII bytes, a HALF_UP rescale.
+           amount="1.50", whole="1.50", note="first"),
+    # Fractional seconds, a leap day, non-ASCII bytes, HALF_UP rescales
+    # (a scale-0 column rounds "2.50" up, where HALF_EVEN would give 2).
     _event(2, ts="2024-07-04 23:59:59.123456", day="2024-02-29", raw="été",
-           amount="2.345", note="second"),
+           amount="2.345", whole="2.50", note="second"),
     # JSON nulls, and a negative HALF_UP rescale (away from zero).
-    _event(3, ts=None, day=None, raw=None, amount="-7.005", note=None),
+    _event(3, ts=None, day=None, raw=None, amount="-7.005", whole=None, note=None),
 ]
 
 
@@ -146,13 +148,14 @@ def test_readers_decode_one_corpus_identically(new_york_tz, tmp_path) -> None:
     rows = simple.to_pylist()
     assert rows[0]["ts"] == NOON_UTC_MICROS
     assert [r["amount"] for r in rows] == [Decimal("1.50"), Decimal("2.35"), Decimal("-7.01")]
+    assert [r["whole"] for r in rows] == [Decimal("2"), Decimal("3"), None]
     assert rows[1]["raw"] == "été".encode()
     assert rows[2]["note"] is None and rows[2]["ts"] is None
 
 
 def test_readers_agree_on_a_missing_key(new_york_tz, tmp_path) -> None:
     corpus = [*CORPUS, _event(4, ts="2024-01-02 00:00:00", day="2024-01-02",
-                              raw="x", amount="0.01")]  # no "note" key
+                              raw="x", amount="0.01", whole="1")]  # no "note" key
     with FakeMaxScale(PARITY_SCHEMA_RECORD, corpus) as srv:
         # nullMissingColumns on: the missing column reads as NULL in both.
         simple = _simple_read(srv, nullmissingcolumns="true")
